@@ -95,9 +95,7 @@ from .txlog import (
     _load,
     _multi_record_path,
     _multi_status,
-    _merge_keys,
     _phys_map,
-    _prepare_merge,
     _prepare_merge_into,
     _read_small,
     _replay,
@@ -227,30 +225,23 @@ def tx_multi(
                     f"modes[{path!r}]='merge' but the table does not "
                     "exist; merge needs live rows to upsert into"
                 )
-            # the exact single-table MERGE body (validation, pruning,
-            # survivor staging, CDF sidecar, writer-feature stamps);
-            # only the commit differs: it carries the multi marker, so
-            # it stays invisible until the coordinator record lands.
-            # Conditional clauses route through the conditional body
-            # (round 15, VERDICT r14 #2: a cross-table conditional
-            # upsert is expressible atomically)
+            # the single-table MERGE body (validation, pruning,
+            # staging, CDF sidecar, writer-feature stamps): the keyed
+            # upsert, or the conditional clauses when given; only the
+            # commit differs: it carries the multi marker, so it stays
+            # invisible until the coordinator record lands
             cl = (merge_clauses or {}).get(path)
-            if cl is not None:
-                prep = _prepare_merge_into(
-                    spark, path, writes[path],
-                    _merge_keys((merge_keys or {})[path]),
-                    list(cl.get("when_matched") or []),
-                    list(cl.get("when_not_matched") or []),
-                    list(cl.get("when_not_matched_by_source") or []),
-                    None, psnap,
+            clauses = (None, None, None) if cl is None else tuple(
+                cl.get(k) or []
+                for k in (
+                    "when_matched", "when_not_matched",
+                    "when_not_matched_by_source",
                 )
-                reval = prep["revalidate"]
-            else:
-                prep = _prepare_merge(
-                    spark, path, writes[path], (merge_keys or {})[path],
-                    None, psnap, ctx="tx_multi participant (merge)",
-                )
-                reval = prep["revalidate"]
+            )
+            prep = _prepare_merge_into(
+                spark, path, writes[path], merge_keys[path], *clauses,
+                None, psnap,
+            )
             extra = dict(prep["extra"] or {})
             extra["multi"] = {"coordinator": coordinator, "txid": txid}
             versions[path] = _commit_rewrite(
@@ -259,7 +250,8 @@ def tx_multi(
                 max_retries=max_retries, stats=prep["stats"],
                 blooms=prep["blooms"],
                 conflict_keys=prep["conflict_keys"], extra=extra,
-                revalidate=reval, planned_rt=prep["planned_rt"],
+                revalidate=prep["revalidate"],
+                planned_rt=prep["planned_rt"],
             )
             continue
         if mode == "append":

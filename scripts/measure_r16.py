@@ -1,6 +1,5 @@
 #!/usr/bin/env python
-"""Round-16 optimization measurement harness (guide §1) — same method
-as scripts/measure_r15.py.
+"""Round-16 optimization measurement harness (guide §1).
 
 For each named query (default: the bench HEADLINE set) at
 $SPARK_GRAFT_SF_DIR (default sf0.1):

@@ -151,13 +151,15 @@ def test_constraint_added_during_merge_enforced_at_commit(spark, table):
     from distributed_mapreduce__spark.sources.txlog import (
         _check_constraints,
         _commit_rewrite,
-        _prepare_merge,
+        _prepare_merge_into,
         _replay,
     )
 
     updates = spark.createDataFrame([(3, "z"), (11, "z")], "id long, tag string")
     snap = _replay(spark, table)
-    prep = _prepare_merge(spark, table, updates, "id", False, snap)
+    prep = _prepare_merge_into(
+        spark, table, updates, "id", None, None, None, False, snap
+    )
     # existing rows are all tag='a', so the ADD validates cleanly —
     # but the in-flight merge's updates carry tag='z'
     tx_add_constraint(spark, table, "tag_a", "tag = 'a'")
@@ -186,7 +188,8 @@ def test_merge_revalidate_sees_staged_rows_not_replan(
     otherwise be validated against rows that differ from what landed."""
     from distributed_mapreduce__spark.sources.txlog import (
         _commit_rewrite,
-        _prepare_merge,
+        _prepare_merge_into,
+        _replay,
     )
 
     p = str(tmp_path / "src_data")
@@ -194,7 +197,10 @@ def test_merge_revalidate_sees_staged_rows_not_replan(
         [(3, "a")], "id long, tag string"
     ).write.parquet(p)
     updates = spark.read.parquet(p)
-    prep = _prepare_merge(spark, table, updates, "id", False, None)
+    prep = _prepare_merge_into(
+        spark, table, updates, "id", None, None, None, False,
+        _replay(spark, table),
+    )
     # the source's backing data changes mid-flight to a VIOLATING row
     spark.createDataFrame(
         [(3, "z")], "id long, tag string"

@@ -153,6 +153,42 @@ def test_duplicate_unmatched_keys_all_insert(spark, tmp_path):
     assert len(rows) == 2  # Delta inserts both
 
 
+def test_not_matched_clauses_see_the_source_alone(spark, tmp_path):
+    """NOT MATCHED conditions and values resolve an unqualified name
+    against the source, whichever plan carries the inserts: the join
+    with the touched files (matched clauses present) or the anti-join
+    (by-source clauses over duplicate source keys)."""
+    ins = [{"condition": "qty > 1",
+            "values": {"id": "id", "qty": "qty", "tag": "tag"}}]
+    src_rows = [(3, 7, "x"), (50, 1, "a"), (50, 2, "b"), (60, 9, "c"),
+                (None, 8, "n")]
+    t = str(tmp_path / "t")
+    _tbl(spark, t, n=10)
+    tx_merge(
+        _src(spark, src_rows), t, "id",
+        when_matched=[{"set": {"tag": "'m'"}}], when_not_matched=ins,
+    )
+    got = tx_read(spark, t).collect()
+    st = _state(spark, t)
+    assert st[3] == (30, "m") and st[60] == (9, "c") and st[None] == (8, "n")
+    assert [(r.qty, r.tag) for r in got if r.id == 50] == [(2, "b")]
+
+    t2 = str(tmp_path / "t2")
+    _tbl(spark, t2, n=10)
+    tx_merge(
+        _src(spark, src_rows), t2, "id", when_not_matched=ins,
+        when_not_matched_by_source=[
+            {"action": "delete", "condition": "t.id >= 8"}
+        ],
+    )
+    st2 = _state(spark, t2)
+    assert 8 not in st2 and 9 not in st2 and st2[3] == (30, "base")
+    assert st2[60] == (9, "c") and st2[None] == (8, "n")
+    assert [
+        r.qty for r in tx_read(spark, t2).collect() if r.id == 50
+    ] == [2]
+
+
 def test_multiple_matching_source_rows_raise(spark, tmp_path):
     t = str(tmp_path / "t")
     _tbl(spark, t, n=10)

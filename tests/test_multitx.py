@@ -529,6 +529,14 @@ def test_multi_merge_conditional_clauses(spark, tmp_path, monkeypatch):
             modes={a: "merge"}, merge_keys={a: "id"},
             merge_clauses={a: {"when_matched_typo": []}},
         )
+    # an entry whose clauses come out empty refuses, as tx_merge does;
+    # it never falls back to the unconditional upsert
+    with pytest.raises(ValueError, match="needs >= 1 WHEN clause"):
+        tx_multi(
+            {a: src}, coord, txn="cmv3",
+            modes={a: "merge"}, merge_keys={a: "id"},
+            merge_clauses={a: {"when_matched": None}},
+        )
 
     # crash matrix: provisional clause-merges invisible on BOTH
     # tables until the coordinator record lands; same-txn retry

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from distributed_mapreduce__spark.sources import txlog
 from distributed_mapreduce__spark.sources.txlog import (
     _commit_rewrite,
-    _prepare_merge,
+    _prepare_merge_into,
     _write_checkpoint,
     tx_clone,
     tx_compact,
@@ -114,7 +114,10 @@ def test_rewrite_conflicts_when_tracking_flips_mid_flight(spark, tmp_path):
     updates = spark.range(10, 15).select(
         "id", F.lit("new").alias("tag")
     )
-    prep = _prepare_merge(spark, t, updates, "id")
+    prep = _prepare_merge_into(
+        spark, t, updates, "id", None, None, None, None,
+        txlog._replay(spark, t),
+    )
     # tracking lands between planning and commit: the merge planned
     # id-less outputs — committing would mint nothing (or fresh ids on
     # a retry) for rows the enable just backfilled

@@ -441,6 +441,36 @@ def test_schema_enforcement_skips_prestamp_tables(spark, tmp_path):
         tx_write(_df(spark, 4, 5, "c"), t)
 
 
+def test_merge_refuses_prestamp_table(spark, tmp_path):
+    """Every writer in this build records a schema, so only a log from
+    before schema recording reaches MERGE without one. Both merge forms
+    share one prepare, which refuses it before staging anything; an
+    overwrite stamps the schema and the upsert then runs."""
+    import json as _json
+    import os
+
+    from distributed_mapreduce__spark.sources.txlog import _PAD, tx_merge
+
+    t = str(tmp_path / "t")
+    tx_write(_df(spark, 0, 3, "a"), t)
+    p = f"{t}/_txlog/{0:0{_PAD}d}.json"
+    c = _json.load(open(p))
+    del c["schema"]
+    os.unlink(p)
+    with open(p, "w") as fh:
+        _json.dump(c, fh)
+    upd = _df(spark, 1, 2, "U")
+    data_before = sorted(os.listdir(f"{t}/data"))
+    with pytest.raises(ValueError, match="recorded write schema"):
+        tx_merge(upd, t, "id")
+    assert sorted(os.listdir(f"{t}/data")) == data_before
+    assert _ids(spark, t) == [0, 1, 2]
+    tx_write(_df(spark, 0, 3, "a"), t, mode="overwrite")
+    tx_merge(upd, t, "id")
+    got = {r.id: r.tag for r in tx_read(spark, t).collect()}
+    assert got == {0: "a", 1: "U", 2: "a"}
+
+
 def test_log_stats_prune_without_footer_io(spark, tmp_path, monkeypatch):
     """stats_cols at write time records per-file [min,max] in the
     commit; merge/delete/filtered reads then prune from the LOG alone.
@@ -1799,7 +1829,7 @@ def test_rewrite_rechecks_features_at_commit_time(spark, tmp_path):
     revalidate)."""
     from distributed_mapreduce__spark.sources.txlog import (
         _commit_rewrite,
-        _prepare_merge,
+        _prepare_merge_into,
         _replay,
         tx_set_properties,
     )
@@ -1807,8 +1837,9 @@ def test_rewrite_rechecks_features_at_commit_time(spark, tmp_path):
     t = str(tmp_path / "t")
     tx_write(_df(spark, 0, 10, "a").coalesce(1), t)
     snap = _replay(spark, t)
-    prep = _prepare_merge(
-        spark, t, _df(spark, 3, 5, "upd"), "id", False, snap
+    prep = _prepare_merge_into(
+        spark, t, _df(spark, 3, 5, "upd"), "id", None, None, None, False,
+        snap,
     )
     # the table is upgraded while the merge is in flight
     tx_set_properties(spark, t, {"writer.features": ["quantum-mor"]})

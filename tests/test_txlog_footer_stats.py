@@ -120,6 +120,20 @@ def test_footer_guards_fall_back(spark, tmp_path):
     assert max(v[1] for v in tsv) == "2022-02-02 00:00:00"
 
 
+def test_footer_minmax_keys_by_commit_name(tmp_path):
+    """Footer stats come back under the caller's file name, never one
+    rebuilt from the absolute path: a relative name with a nested
+    ``/data/`` segment must not collapse onto its last segment."""
+    t = str(tmp_path / "t")
+    name = "data/k=data/data/part-0.parquet"
+    os.makedirs(os.path.dirname(f"{t}/{name}"))
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"id": [3, 9, 5]}), f"{t}/{name}")
+    assert txlog._footer_minmax(t, [name], ["id"]) == {name: {"id": [3, 9]}}
+
+
 def test_footer_row_counts_match_job(spark, tmp_path, monkeypatch):
     df = spark.range(0, 1000).withColumn("v", F.col("id") * 2)
 
