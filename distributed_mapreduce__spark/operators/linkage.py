@@ -130,12 +130,17 @@ def fuzzy_key_join(
     # computation over reversed keys. One driver-side row per side —
     # the per-side min LENGTH also answers the short-core fallback
     # gate below, replacing what used to be two probe jobs.
+    # min/max order is BINARY whatever the session collation: the
+    # argument needs every key to sort between them byte-wise (a
+    # case-insensitive min/max can share a prefix some key lacks)
     def affix_stats(keys: DataFrame, side: str):
+        fwd = F.collate(F.col(side), "UTF8_BINARY")
+        rev = F.collate(F.reverse(side), "UTF8_BINARY")
         return keys.agg(
-            F.min(side),
-            F.max(side),
-            F.min(F.reverse(side)),
-            F.max(F.reverse(side)),
+            F.min(fwd),
+            F.max(fwd),
+            F.min(rev),
+            F.max(rev),
             F.min(F.length(side)),
         ).first()
 

@@ -551,32 +551,6 @@ def _multi_status(spark, coordinator: str, txid: str) -> str:
     return status
 
 
-def _has_pending_multi(spark, path: str, version: int) -> bool:
-    """Any provisional multi-txn commit ≤ version still unresolved?"""
-    for v, kind in _list_commits(spark, path):
-        if kind != "commit" or v > version:
-            continue
-        m = _load(spark, path, f"{v:0{_PAD}d}.json").get("multi")
-        if m and _multi_status(spark, m["coordinator"], m["txid"]) == "pending":
-            return True
-    return False
-
-
-def _pending_multi_adds(spark, path: str) -> list[str]:
-    """Data files added by still-PENDING multi-txn commits — invisible
-    to snapshots, but must survive vacuum: the transaction may yet
-    resolve committed."""
-    out: list[str] = []
-    for v, kind in _list_commits(spark, path):
-        if kind != "commit":
-            continue
-        c = _load(spark, path, f"{v:0{_PAD}d}.json")
-        m = c.get("multi")
-        if m and _multi_status(spark, m["coordinator"], m["txid"]) == "pending":
-            out.extend(c.get("add", []))
-    return out
-
-
 def _check_reader(record: dict, path: str, version: int) -> None:
     """Refuse to replay a commit/checkpoint stamped with a feature
     level above what this build understands (see READER_VERSION)."""
@@ -640,6 +614,12 @@ class _Snapshot:
     #: Derived during the fold and persisted in checkpoints, so the
     #: registry survives log truncation; empty = never partitioned
     spec_history: list = dataclasses.field(default_factory=list)
+    #: still-PENDING multi-table commit records in the replay range,
+    #: commit order — invisible to every field above, but the
+    #: coordinator record can still apply them at their version.
+    #: Checkpoints never fold an unresolved multi-table commit, so a
+    #: replay sees every one
+    pending: list = dataclasses.field(default_factory=list)
 
 
 def _replay(spark, path: str, version: int | None = None) -> _Snapshot:
@@ -737,11 +717,13 @@ def _replay(spark, path: str, version: int | None = None) -> _Snapshot:
             s.row_bases.setdefault(f, b)
         m = c.get("multi")
         if m is not None and (
-            _multi_status(spark, m["coordinator"], m["txid"]) != "committed"
-        ):
+            status := _multi_status(spark, m["coordinator"], m["txid"])
+        ) != "committed":
             # provisional multi-table commit: pending or aborted →
             # invisible (it becomes visible atomically, for every
             # participant table, when the coordinator record lands)
+            if status == "pending":
+                s.pending.append({**c, "version": v})
             continue
         if c.get("properties") is not None:
             for k, val in c["properties"].items():
@@ -2159,25 +2141,22 @@ def _collect_stats(
         aggs.append(F.min(c).alias(f"__lo_{c}"))
         aggs.append(F.max(c).alias(f"__hi_{c}"))
     reader = spark.read if snap is None else _reader_for(spark, path, snap)
+    # rows key back to the CALLER's names through the file basename
+    # (placed files are UUID-named): rebuilding a name from the
+    # scanned URI would mis-key an absolute source ref (a shallow
+    # clone's) and must undo the URI's escaping of partition dirs
+    by_base = _names_by_base(files)
     rows = (
         reader.parquet(*[_abs(path, f) for f in files])
-        .groupBy(F.input_file_name().alias("__f"))
+        .groupBy(
+            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("__f")
+        )
         .agg(*aggs)
         .collect()
     )
     out: dict[str, dict[str, list]] = {}
     for r in rows:
-        # rsplit on "/data/": partition layouts nest files under
-        # data/<col>=<val>/..., and the relative path must keep that.
-        # input_file_name() returns a URI, which percent-escapes the
-        # on-disk directory names (space -> %20, an on-disk %25 from
-        # hive escaping -> %2525); the commit's add list carries RAW
-        # FileSystem names from _stage_and_place, so the key must be
-        # unquoted ONCE back to the on-disk form or partition values
-        # with such characters silently lose their [v, v] stats (and
-        # with them, pruning)
-        name = "data/" + unquote(r["__f"].rsplit("/data/", 1)[-1])
-        out[name] = {
+        out[by_base[unquote(r["__f"])]] = {
             c: [_json_stat(r[f"__lo_{c}"]), _json_stat(r[f"__hi_{c}"])]
             for c in cols
         }
@@ -2871,9 +2850,9 @@ def _write_checkpoint(spark, path: str, version: int) -> bool:
     transaction as absent, and a later coordinator publish would then
     never surface its files. Checkpoints are an optimization; skipping
     is always safe."""
-    if _has_pending_multi(spark, path, version):
-        return False
     snap = _replay(spark, path, version)
+    if snap.pending:
+        return False
     eps, mor = snap.eps, snap.mor
     files = sorted(eps)
     fs = hadoop_fs(spark, path)[0]
@@ -3063,12 +3042,33 @@ def _prunable(file_stats: dict, conjuncts: "list[tuple]") -> bool:
     return False
 
 
+def _conjuncts(where: "tuple | list[tuple] | None") -> "list[tuple]":
+    """One ``(col, lo, hi)`` conjunct or a list of them, as a list."""
+    if where is None:
+        return []
+    return [where] if isinstance(where, tuple) else list(where)
+
+
+def _residual(df: DataFrame, conjuncts: "list[tuple]") -> DataFrame:
+    """Re-apply pruning conjuncts as filters: pruning only skips files,
+    these filters own correctness."""
+    from pyspark.sql import functions as F
+
+    for col, lo, hi in conjuncts:
+        if lo is not None:
+            df = df.filter(F.col(col) >= F.lit(lo))
+        if hi is not None:
+            df = df.filter(F.col(col) <= F.lit(hi))
+    return df
+
+
 def _prune_files(
     spark, path: str, snap: "_Snapshot", files: list[str],
     conjuncts: "list[tuple]",
 ) -> list[str]:
     """Log-stats + bloom data skipping for ``(col, lo, hi)`` conjuncts
-    — the shared prune core of tx_read and tx_scan_with_row_ids.
+    — the shared prune core of tx_read, tx_scan_with_row_ids and
+    UPDATE / DELETE WHERE.
     Column mapping: stats and blooms key on stable PHYSICAL names, so
     the predicate column translates here; the caller's residual
     filter stays logical."""
@@ -3146,11 +3146,7 @@ def tx_read(
     snap = _replay(spark, path, version)
     eps, mor = snap.eps, snap.mor
     files = sorted(eps)
-    conjuncts = (
-        [] if where is None
-        else [where] if isinstance(where, tuple)
-        else list(where)
-    )
+    conjuncts = _conjuncts(where)
     if conjuncts:
         files = _prune_files(spark, path, snap, files, conjuncts)
     if not files:
@@ -3167,16 +3163,10 @@ def tx_read(
         if all_files:
             return spark.read.parquet(*all_files).limit(0)
         raise FileNotFoundError(f"table {path} has no data files at all")
-    out = _read_with_mor(spark, path, snap, files, eps, mor, merge_schema)
-    if conjuncts:
-        from pyspark.sql import functions as F
-
-        for col, lo, hi in conjuncts:
-            if lo is not None:
-                out = out.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                out = out.filter(F.col(col) <= F.lit(hi))
-    return out
+    return _residual(
+        _read_with_mor(spark, path, snap, files, eps, mor, merge_schema),
+        conjuncts,
+    )
 
 
 def _read_table_files(
@@ -3221,13 +3211,12 @@ def _with_pos_cols(df: DataFrame) -> DataFrame:
     )
 
 
-def _pos_name_map(spark, files: list[str]) -> DataFrame:
-    """(``__dv_base``, ``_file``) mapping from scanned basenames back
-    to the log's stored file names (relative, or absolute for a
-    clone's source refs) — broadcast-joined onto a positional scan.
+def _names_by_base(files: list[str]) -> "dict[str, str]":
+    """Basename -> the log's stored file name (relative, or absolute
+    for a clone's source refs), for mapping scanned files back to it.
     Placed files are UUID-named so collisions are practically
     impossible; refuse loudly if one ever appears rather than
-    mis-attributing positions."""
+    mis-attributing rows."""
     base_map: dict[str, str] = {}
     for f in files:
         b = f.rsplit("/", 1)[-1]
@@ -3238,8 +3227,15 @@ def _pos_name_map(spark, files: list[str]) -> DataFrame:
                 "attribute rows"
             )
         base_map[b] = f
+    return base_map
+
+
+def _pos_name_map(spark, files: list[str]) -> DataFrame:
+    """(``__dv_base``, ``_file``) mapping from scanned basenames back
+    to the log's stored file names — broadcast-joined onto a
+    positional scan."""
     return spark.createDataFrame(
-        list(base_map.items()), "__dv_base string, _file string"
+        list(_names_by_base(files).items()), "__dv_base string, _file string"
     )
 
 
@@ -3368,6 +3364,30 @@ def _scan_files(
     return out
 
 
+def _live_pos_scan(
+    spark, path: str, snap: _Snapshot, files: list[str],
+    merge_schema: bool = False, keep_row_col: bool = False,
+) -> DataFrame:
+    """:func:`_scan_files` ``with_pos=True`` minus the positions live
+    deletion vectors mark: ONE broadcast anti-join on ``(_file,
+    _pos)`` against the union of live DV sidecars (a position pair
+    matches at most its own file, so one join covers every DV). Reads,
+    positional scans, DV settlement and the DML matched set all use
+    it, so deleted coordinates never resurface."""
+    from pyspark.sql import functions as F
+
+    df = _scan_files(
+        spark, path, snap, files, merge_schema,
+        with_pos=True, keep_row_col=keep_row_col,
+    )
+    if snap.dv:
+        pos = spark.read.parquet(
+            *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
+        )
+        df = df.join(F.broadcast(pos), ["_file", "_pos"], "left_anti")
+    return df
+
+
 def _reader_for(spark, path: str, snap: _Snapshot, merge_schema: bool = False):
     """A DataFrameReader configured with the snapshot's read contract
     — the ONE place the two schema hazards are handled, shared by
@@ -3414,12 +3434,9 @@ def _read_with_mor(
 
     Live positional deletion vectors (``tx_delete_where`` /
     ``tx_delete_positions``) apply here too: files any live DV targets
-    scan WITH row positions and take ONE broadcast anti-join on
-    ``(_file, _pos)`` against the union of live DV sidecars (a
-    position pair matches at most its own file, so one join covers
-    every DV); untargeted files scan plain. Equality tombstones and
-    DVs never coexist (both write fronts refuse), so the two
-    mechanisms never stack on one file."""
+    take :func:`_live_pos_scan`; untargeted files scan plain.
+    Equality tombstones and DVs never coexist (both write fronts
+    refuse), so the two mechanisms never stack on one file."""
     from pyspark.sql import functions as F
 
     if snap.dv:
@@ -3435,17 +3452,9 @@ def _read_with_mor(
         clean = [f for f in files if f not in targeted]
         parts = []
         if dirty:
-            df = _scan_files(
-                spark, path, snap, dirty, merge_schema, with_pos=True
-            )
-            sidecars = [
-                _abs(path, sf) for d in snap.dv for sf in d["files"]
-            ]
-            pos = spark.read.parquet(*sidecars)
             parts.append(
-                df.join(
-                    F.broadcast(pos), ["_file", "_pos"], "left_anti"
-                ).drop("_file", "_pos")
+                _live_pos_scan(spark, path, snap, dirty, merge_schema)
+                .drop("_file", "_pos")
             )
         if clean:
             parts.append(_scan_files(spark, path, snap, clean, merge_schema))
@@ -3798,7 +3807,11 @@ def tx_vacuum(
     # where a successful pivot checkpoint says nothing about it.
     folded = _write_checkpoint(spark, path, pivot)
     fs = hadoop_fs(spark, path)[0]
-    live |= {_abs(path, f) for f in _pending_multi_adds(spark, path)}
+    live |= {
+        _abs(path, f)
+        for c in _replay(spark, path).pending
+        for f in c.get("add", [])
+    }
 
     def _in_grace(hpath) -> bool:
         # real wall clock on purpose (not the _now test seam): the
@@ -4620,6 +4633,7 @@ def _prepare_merge_into(
 def _concurrent_append_conflicts(
     spark,
     path: str,
+    snap_now: "_Snapshot",
     snap_version: int,
     key_col: str,
     lo,
@@ -4636,24 +4650,21 @@ def _concurrent_append_conflicts(
     :func:`_files_overlapping_keys`); a file with no stats at all
     cannot be proven disjoint and conflicts conservatively.
 
-    PENDING multi-table commits (sources/multitx.py) are checked at
-    ANY version, not just after the anchor: their adds are invisible
-    to the snapshot this rewrite planned on, but the coordinator
-    record makes them visible retroactively at their own version — a
-    key-overlapping pending add that resolved after we committed
-    would duplicate merged keys exactly like a post-anchor append."""
-    logged = _log_stats(spark, path)
+    PENDING multi-table commits (sources/multitx.py, read from
+    ``snap_now.pending``) are checked at ANY version, not just after
+    the anchor: their adds are invisible to the snapshot this rewrite
+    planned on, but the coordinator record makes them visible
+    retroactively at their own version — a key-overlapping pending add
+    that resolved after we committed would duplicate merged keys
+    exactly like a post-anchor append."""
+    commits = [c for c in snap_now.pending if c["version"] <= snap_version]
+    commits += [
+        _load(spark, path, f"{v:0{_PAD}d}.json")
+        for v, kind in _list_commits(spark, path)
+        if kind == "commit" and v > snap_version
+    ]
     conflicts = []
-    for v, kind in _list_commits(spark, path):
-        if kind != "commit":
-            continue
-        c = _load(spark, path, f"{v:0{_PAD}d}.json")
-        if v <= snap_version:
-            m = c.get("multi")
-            if not m or _multi_status(
-                spark, m["coordinator"], m["txid"]
-            ) != "pending":
-                continue
+    for c in commits:
         for f in c.get("add", []):
             if f in our_added:
                 continue
@@ -4665,7 +4676,7 @@ def _concurrent_append_conflicts(
                 conflicts.append(f)
                 continue
             st = ((c.get("stats") or {}).get(f) or {}).get(key_col) or (
-                logged.get(f) or {}
+                snap_now.stats.get(f) or {}
             ).get(key_col)
             if _file_overlaps(path, f, key_col, st, lo, hi):
                 conflicts.append(f)
@@ -4689,16 +4700,33 @@ def _commit_rewrite(
     row_ids_materialized: bool = False,
     planned_rt: "bool | None" = None,
 ) -> int:
-    """Commit a rewrite (merge/delete/compact): remove+add in one
-    version, with two conflict checks run at commit time, every retry:
+    """The one data-commit path. A REWRITE (merge/delete/update/
+    compact/zorder/apply_deletes) removes and adds files in one
+    version; a DELETION-VECTOR commit (DV delete/update/positions)
+    removes nothing, carries ``extra["dv"] = {"files", "targets"}``
+    and, for an UPDATE, adds its post-image files. A DV's targets join
+    the removed files in every check below. Run on every attempt, the
+    first one included, against one fresh replay:
 
-    - still-live: if anything we remove was already removed by a
-      commit after our snapshot, abort loudly (concurrent rewrite).
+    - still-live: a file we remove or target that a commit after our
+      snapshot removed aborts (concurrent rewrite; DV positions
+      address the old file's row order).
+    - pending multi-table: a file a still-PENDING multi-table commit
+      (``_Snapshot.pending``) removed aborts — replay skips it, but
+      its coordinator record applies it retroactively, so committing
+      would resurrect the rows it rewrote the instant it resolves.
+      The operator resolves it (wait, or tx_multi_abort).
+    - row tracking: added files land under the tracking state the
+      caller planned under; delete debt: see the tombstone and DV
+      rules in the loop.
     - ``conflict_keys=(key_col, lo, hi)``: if a commit after our
       snapshot ADDED files whose key range overlaps the rewrite's
       target range, abort loudly (concurrent append — committing
       anyway would duplicate merged keys / resurrect deleted ones;
       Delta raises ConcurrentAppendException for exactly this).
+
+    A same-``txn`` commit that landed meanwhile wins: its version is
+    returned (the ``_commit_with_retries`` rule).
 
     Whenever the log has advanced past ``snap_version`` (the version
     the caller's pre-stage checks were anchored at), the freshly
@@ -4709,8 +4737,13 @@ def _commit_rewrite(
     re-runs CHECK constraints on its updates, so a constraint added
     while the merge was in flight is enforced on that merge's rows
     instead of slipping past the add-time validation (which only saw
-    the pre-merge table)."""
+    the pre-merge table; tx_update does the same for its post-images).
+    The hook is a Spark job, so it never runs on a first attempt at
+    the planning version."""
     fs = hadoop_fs(spark, path)[0]
+    extra = extra or {}
+    dv = extra.get("dv")
+    touched = set(removed) | set(dv["targets"] if dv else [])
     anchor = snap_version
     rt_counts: "dict | None" = None
     # row-tracking state the caller PLANNED under: a preserving
@@ -4729,7 +4762,8 @@ def _commit_rewrite(
         )
     for _ in range(max_retries):
         snap_now = _replay(spark, path)
-        eps_now, mor_now = snap_now.eps, snap_now.mor
+        if txn is not None and (prior := snap_now.txns.get(txn)) is not None:
+            return prior
         if snap_now.version > anchor:
             _check_writer_features(snap_now.properties, path)
             if revalidate is not None:
@@ -4742,57 +4776,70 @@ def _commit_rewrite(
                 "planned its row-id handling against) — re-run the "
                 f"{action} on the new snapshot"
             )
-        gone = set(removed) - set(eps_now)
+        gone = touched - set(snap_now.eps)
         if gone:
             raise RuntimeError(
                 f"conflict: files rewritten concurrently since version "
                 f"{snap_version}: {sorted(gone)[:3]}... — re-run the "
                 f"{action} on the new snapshot"
             )
-        # a PENDING multi-table commit's removes are invisible to the
-        # still-live check above (replay skips unresolved commits),
-        # but the coordinator record applies them retroactively at
-        # their version — committing a rewrite of the same files would
-        # resurrect rows the pending transaction rewrote (or vice
-        # versa) the instant it resolves. Overlap = hard conflict;
-        # the operator resolves it (wait, or tx_multi_abort).
-        if removed:
-            for v, kind in _list_commits(spark, path):
-                if kind != "commit":
-                    continue
-                c = _load(spark, path, f"{v:0{_PAD}d}.json")
-                m = c.get("multi")
-                if not m or _multi_status(
-                    spark, m["coordinator"], m["txid"]
-                ) != "pending":
-                    continue
-                clash = set(c.get("remove", [])) & set(removed)
-                if clash:
-                    raise RuntimeError(
-                        f"conflict: pending multi-table transaction "
-                        f"{m['txid']!r} (coordinator {m['coordinator']}) "
-                        f"rewrote files this {action} also rewrites: "
-                        f"{sorted(clash)[:3]}... — let it resolve (or "
-                        "tx_multi_abort it), then re-run on the new "
-                        "snapshot"
-                    )
+        for c in snap_now.pending:
+            clash = touched.intersection(c.get("remove", []))
+            if clash:
+                m = c["multi"]
+                raise RuntimeError(
+                    f"conflict: pending multi-table transaction "
+                    f"{m['txid']!r} (coordinator {m['coordinator']}) "
+                    f"rewrote files this {action} also rewrites: "
+                    f"{sorted(clash)[:3]}... — let it resolve (or "
+                    "tx_multi_abort it), then re-run on the new "
+                    "snapshot"
+                )
         # a rewrite's outputs carry the REWRITE's add-version, so any
         # merge-on-read tombstone it didn't fold in would no longer
         # apply to them — rows would silently dodge their delete. The
         # rewrite must therefore commit against exactly the tombstone
         # set it planned for (none, unless it is an apply_deletes).
-        planned = set((extra or {}).get("mor_clears", []))
-        if {t["version"] for t in mor_now} != planned:
+        planned = set(extra.get("mor_clears", []))
+        if {t["version"] for t in snap_now.mor} != planned:
             raise RuntimeError(
                 f"conflict: merge-on-read tombstones changed since "
                 f"version {snap_version}; re-run the {action} (or "
                 "tx_apply_deletes) on the new snapshot"
             )
-        # same rule for deletion vectors: a rewrite's outputs are NEW
-        # files no live DV targets, so any DV it didn't plan to clear
-        # would silently lose its deletes on the rewritten rows
-        planned_dv = set((extra or {}).get("dv_clears", []))
-        if {d["version"] for d in snap_now.dv} != planned_dv:
+        # deletion vectors: a rewrite's outputs are NEW files no DV
+        # targets, so a DV it didn't plan to clear must not be new or
+        # sit on a file it removes (its deletes would be lost), and
+        # every planned clear must still be live. For a DV commit, only
+        # a NEW DV on one of its targets conflicts: both sides chose
+        # positions against the same pre-image rows (an UPDATE over a
+        # concurrent DELETE would resurrect the deleted row as its
+        # post-image); disjoint-target DVs commute. The no-op rule: an
+        # older DV the commit neither clears nor rewrites is no
+        # conflict, so a no-match DELETE WHERE / UPDATE (an empty commit
+        # that still records the txn id and lets change feeds
+        # checkpoint past it) lands cleanly on a table carrying DVs.
+        planned_dv = set(extra.get("dv_clears", []))
+        for d in snap_now.dv:
+            hit = touched.intersection(d["targets"])
+            if dv is not None and d["version"] > snap_version and hit:
+                raise RuntimeError(
+                    f"conflict: a concurrent delete/update committed "
+                    f"deletion vectors against files this {action} "
+                    f"also targets: {sorted(hit)[:3]}... — re-plan "
+                    f"the {action} on the new snapshot"
+                )
+        if dv is None and (
+            planned_dv - {d["version"] for d in snap_now.dv}
+            or any(
+                d["version"] not in planned_dv
+                and (
+                    d["version"] > snap_version
+                    or touched.intersection(d["targets"])
+                )
+                for d in snap_now.dv
+            )
+        ):
             raise RuntimeError(
                 f"conflict: deletion vectors changed since version "
                 f"{snap_version}; re-run the {action} (or "
@@ -4804,15 +4851,12 @@ def _commit_rewrite(
             # range — provable disjointness on any one column clears
             # it), or (None, None, None) = any append conflicts (full
             # read scope)
-            specs = (
-                [conflict_keys]
-                if isinstance(conflict_keys, tuple)
-                else list(conflict_keys)
-            )
+            specs = _conjuncts(conflict_keys)
             per = [
                 set(
                     _concurrent_append_conflicts(
-                        spark, path, snap_version, kc, lo, hi, set(added)
+                        spark, path, snap_now, snap_version, kc, lo, hi,
+                        set(added),
                     )
                 )
                 for kc, lo, hi in specs
@@ -4840,8 +4884,7 @@ def _commit_rewrite(
             payload["stats"] = stats
         if blooms:
             payload["blooms"] = blooms
-        if extra:
-            payload.update(extra)
+        payload.update(extra)
         if added and _row_tracking_on(snap_now.properties):
             if row_ids_materialized:
                 # preserving rewrite: outputs carry _row_id bytes — a
@@ -5637,8 +5680,6 @@ def tx_apply_deletes(spark: SparkSession, path: str) -> int | None:
         # targeted files without their DV'd positions (the same ONE
         # broadcast anti-join the reader runs), clear the DVs in the
         # commit. mor and dv never coexist (both write fronts refuse).
-        from pyspark.sql import functions as F
-
         dv_versions = [d["version"] for d in snap.dv]
         targeted = sorted(
             {f for d in snap.dv for f in d["targets"] if f in snap.eps}
@@ -5652,15 +5693,8 @@ def tx_apply_deletes(spark: SparkSession, path: str) -> int | None:
                 planned_rt=_row_tracking_on(snap.properties),
             )
         preserve_ids = _row_tracking_on(snap.properties)
-        df = _scan_files(
-            spark, path, snap, targeted,
-            with_pos=True, keep_row_col=preserve_ids,
-        )
-        pos = spark.read.parquet(
-            *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
-        )
-        survivors = df.join(
-            F.broadcast(pos), ["_file", "_pos"], "left_anti"
+        survivors = _live_pos_scan(
+            spark, path, snap, targeted, keep_row_col=preserve_ids
         )
         if preserve_ids:
             # settling deletes must not re-identify the survivors
@@ -5955,6 +5989,21 @@ def _attach_row_ids(spark, snap: "_Snapshot", df: DataFrame) -> DataFrame:
     )
 
 
+def _empty_frame(
+    spark, snap: "_Snapshot", prefix: "list[tuple[str, str]]"
+) -> DataFrame:
+    """An empty frame of the snapshot's schema behind the ``prefix``
+    ``(name, type)`` columns."""
+    from pyspark.sql.types import StructField, StructType
+
+    struct = StructType()
+    for name, typ in prefix:
+        struct.add(name, typ)
+    for f in json.loads(snap.schema)["fields"] if snap.schema else []:
+        struct.add(StructField.fromJson(f))
+    return spark.createDataFrame([], struct)
+
+
 def tx_scan_with_row_ids(
     spark: SparkSession, path: str, version: int | None = None,
     where: "tuple | list[tuple] | None" = None,
@@ -5966,8 +6015,6 @@ def tx_scan_with_row_ids(
     follow one row through maintenance. ``where=(col, lo, hi)``
     conjuncts prune files from the log exactly like ``tx_read``
     (stats + blooms + transforms) and re-apply as residual filters."""
-    from pyspark.sql import functions as F
-
     snap = _replay(spark, path, version)
     if not _row_tracking_on(snap.properties):
         raise ValueError(
@@ -5980,41 +6027,17 @@ def tx_scan_with_row_ids(
             "tombstones; run tx_apply_deletes first"
         )
     files = sorted(snap.eps)
-    conjuncts = (
-        [] if where is None
-        else [where] if isinstance(where, tuple)
-        else list(where)
-    )
+    conjuncts = _conjuncts(where)
     if conjuncts and files:
         files = _prune_files(spark, path, snap, files, conjuncts)
     if not files:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        base = json.loads(snap.schema)["fields"] if snap.schema else []
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [StructField(_ROW_ID, LongType())]
-                + [StructField.fromJson(f) for f in base]
-            ),
-        )
-    df = _scan_files(
-        spark, path, snap, files, with_pos=True, keep_row_col=True
+        return _empty_frame(spark, snap, [(_ROW_ID, "long")])
+    df = _attach_row_ids(
+        spark, snap,
+        _live_pos_scan(spark, path, snap, files, keep_row_col=True),
     )
-    if snap.dv:
-        pos = spark.read.parquet(
-            *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
-        )
-        df = df.join(F.broadcast(pos), ["_file", "_pos"], "left_anti")
-    df = _attach_row_ids(spark, snap, df)
     data = [c for c in df.columns if c not in ("_file", "_pos", _ROW_ID)]
-    out = df.select(_ROW_ID, *data)
-    for col, lo, hi in conjuncts:  # residual filters own correctness
-        if lo is not None:
-            out = out.filter(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            out = out.filter(F.col(col) <= F.lit(hi))
-    return out
+    return _residual(df.select(_ROW_ID, *data), conjuncts)
 
 
 def tx_scan_with_pos(
@@ -6036,8 +6059,6 @@ def tx_scan_with_pos(
     victims are key-addressed, and surfacing them WITH coordinates
     would invite double-delete bookkeeping — settle with
     ``tx_apply_deletes`` first."""
-    from pyspark.sql import functions as F
-
     snap = _replay(spark, path, version)
     if snap.mor:
         raise ValueError(
@@ -6047,167 +6068,224 @@ def tx_scan_with_pos(
         )
     files = sorted(snap.eps)
     if not files:
-        from pyspark.sql.types import (
-            LongType, StringType, StructField, StructType,
+        return _empty_frame(
+            spark, snap, [("_file", "string"), ("_pos", "long")]
         )
-
-        base = (
-            json.loads(snap.schema)["fields"] if snap.schema else []
-        )
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("_file", StringType()),
-                    StructField("_pos", LongType()),
-                ]
-                + [StructField.fromJson(f) for f in base]
-            ),
-        )
-    df = _scan_files(spark, path, snap, files, with_pos=True)
-    if snap.dv:
-        pos = spark.read.parquet(
-            *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
-        )
-        df = df.join(F.broadcast(pos), ["_file", "_pos"], "left_anti")
-    return df
+    return _live_pos_scan(spark, path, snap, files)
 
 
-def _commit_dv(
+def _commit_dml(
     spark,
     path: str,
     snap: "_Snapshot",
-    sidecars: list[str],
-    targets: list[str],
     txn: str | None,
-    cdf_files: "list[str] | None",
-    max_retries: int = 20,
-    action: str = "delete",
+    action: str,
+    cdf: bool,
     added: "list[str] | None" = None,
-    stats: dict | None = None,
-    blooms: dict | None = None,
-    extra_revalidate=None,
+    removed: "list[str] | None" = None,
+    dv: "dict | None" = None,
+    pre: "DataFrame | None" = None,
+    post: "DataFrame | None" = None,
 ) -> int:
-    """Commit a deletion-vector delete/update: no files removed — the
-    ``dv`` entry names the KB-scale position sidecars and the exact
-    data files they target; an UPDATE additionally ``add``s the files
-    carrying the rewritten rows, atomically in the same commit.
-    Commit-time revalidation (every time the log advances past the
-    prepare snapshot): writer features, no concurrent equality
-    tombstone, every target STILL LIVE — a concurrent rewrite of a
-    target would orphan our positions (they address the old file's
-    row order), so it is a hard conflict, the same rule
-    ``_commit_rewrite`` enforces for removes — plus the caller's
-    ``extra_revalidate(props)`` hook (tx_update re-runs CHECK
-    constraints on its post-images)."""
-    fs = hadoop_fs(spark, path)[0]
-    used = {"dv"} | ({"cdf"} if cdf_files is not None else set())
+    """Commit a row-level DML result through :func:`_commit_rewrite`:
+    a rewrite (``removed`` → ``added``), a DV ``dv = {"files",
+    "targets"}`` plus any post-images in ``added``, or, when nothing
+    matched, an empty commit that still records ``txn`` (and an empty
+    change entry, so change feeds checkpoint past the no-op). With
+    ``cdf`` on, ``pre`` (the matched rows) and ``post`` (an UPDATE's
+    post-images) are staged as the change rows; ``post`` is also
+    re-checked against CHECK constraints if the log advances before
+    the commit. The writer features used (``dv``, ``cdf``) are
+    stamped on first use."""
+    from pyspark.sql import functions as F
+
+    added, removed = added or [], removed or []
+    extra: dict = {}
+    used: "set[str]" = set()
+    if dv is not None:
+        extra.update(dv=dv, reader=4)
+        used.add("dv")
+    if cdf:
+        files: "list[str]" = []
+        if pre is not None:
+            changes = pre.withColumn(
+                "_change_type",
+                F.lit("delete" if post is None else "update_preimage"),
+            )
+            if post is not None:
+                changes = changes.unionByName(
+                    post.withColumn(
+                        "_change_type", F.lit("update_postimage")
+                    )
+                )
+            files = _stage_cdf(_to_physical(changes, snap.schema), path)
+            used.add("cdf")
+        extra["cdf"] = {"files": files, "key": None}
     delta = _writer_feature_delta(snap.properties, used)
-    # row tracking: UPDATE post-images are new row versions — fresh
-    # ids from this commit's reserved range
-    rt_counts = (
-        _count_rows_per_file(spark, path, added)
-        if added and _row_tracking_on(snap.properties)
+    if delta:
+        extra["properties"] = delta
+    touched = removed or (dv["targets"] if dv is not None else [])
+    return _commit_rewrite(
+        spark, path, added, removed, snap.version, txn, action,
+        stats=_rewrite_stats(spark, path, touched, added, None, snap),
+        blooms=_rewrite_blooms(spark, path, touched, added, snap),
+        extra=extra,
+        revalidate=None if post is None else (
+            lambda props: _check_constraints(post, props, path, "tx_update")
+        ),
+        planned_rt=_row_tracking_on(snap.properties),
+    )
+
+
+def _dml(
+    spark,
+    path: str,
+    condition: str,
+    assign: "dict[str, str] | None",
+    mode: str,
+    txn: str | None,
+    cdf: "bool | None",
+    prune: "tuple | list[tuple] | None",
+) -> int:
+    """The one body of :func:`tx_update` (``assign`` = its SET map)
+    and :func:`tx_delete_where` (``assign=None``), in four steps:
+
+    - scope: replay, the writer-feature and txn checks, the mode,
+      tombstone and DV refusals, then :func:`_prune_files` over
+      ``prune``;
+    - matched set: one live positional scan of the scoped files
+      (:func:`_live_pos_scan`) filtered by ``condition`` — IS TRUE,
+      so rows where it is NULL are untouched;
+    - per-row action: drop the row, or apply the assignments (each
+      must keep its column's type; CHECK constraints validate the
+      post-images and are re-checked at commit if the log advanced);
+    - commit (:func:`_commit_dml`): a DV over the matched positions
+      plus the post-images (``merge_on_read``), or a rewrite of the
+      touched files (``copy_on_write``).
+
+    One materialization serves every consumer: the matched set in
+    ``merge_on_read`` (DV stage, targets, post-images, change rows),
+    the touched-file read in ``copy_on_write`` with CDF on (rewrite,
+    change rows); the predicate is deterministic over this snapshot."""
+    from pyspark.sql import functions as F
+
+    if mode not in ("copy_on_write", "merge_on_read"):
+        raise ValueError(
+            f"mode must be copy_on_write|merge_on_read, got {mode!r}"
+        )
+    if assign is not None and not assign:
+        raise ValueError("tx_update needs at least one SET assignment")
+    action, op = (
+        ("delete", "tx_delete_where") if assign is None
+        else ("update", "tx_update")
+    )
+    snap = _replay(spark, path)
+    _check_writer_features(snap.properties, path)
+    if txn is not None and (prior := snap.txns.get(txn)) is not None:
+        return prior
+    if snap.mor:
+        raise ValueError(
+            f"{op} on {path} with live equality tombstones "
+            f"(versions {[t['version'] for t in snap.mor]}); run "
+            "tx_apply_deletes first"
+        )
+    if mode == "copy_on_write" and snap.dv:
+        raise ValueError(
+            f"{op}(mode='copy_on_write') on {path} with live "
+            f"deletion vectors (versions "
+            f"{[d['version'] for d in snap.dv]}); run tx_apply_deletes "
+            "first"
+        )
+    if cdf is None:
+        cdf = _cdf_props_default(snap.properties)
+    files = sorted(snap.eps)
+    if prune is not None and files:
+        files = _prune_files(spark, path, snap, files, _conjuncts(prune))
+    if not files:
+        return _commit_dml(spark, path, snap, txn, action, cdf)
+    scan = _live_pos_scan(spark, path, snap, files)
+    data_cols = [c for c in scan.columns if c not in ("_file", "_pos")]
+    cond = F.expr(condition)
+    matched = scan.filter(cond)
+    if mode == "merge_on_read":
+        matched = matched.localCheckpoint(eager=False)
+    pre = matched.drop("_file", "_pos")
+    types = dict(pre.dtypes)
+
+    def assigned(rows: DataFrame) -> DataFrame:
+        return rows.select(
+            *[
+                F.expr(assign[c]).alias(c) if c in assign else F.col(c)
+                for c in data_cols
+            ]
+        )
+
+    updated = None
+    if assign is not None:
+        bad = [c for c in assign if c not in data_cols]
+        if bad:
+            raise ValueError(
+                f"tx_update SET columns {bad} not in the table "
+                f"(has {data_cols})"
+            )
+        updated = assigned(pre)
+        retyped = {
+            c: (types[c], t) for c, t in updated.dtypes if t != types[c]
+        }
+        if retyped:
+            raise ValueError(
+                f"tx_update assignments change column types {retyped}; "
+                "cast the expression back to the column's type"
+            )
+        _check_constraints(updated, snap.properties, path, "tx_update")
+    sidecars = (
+        _stage_dv(matched.select("_file", "_pos"), path)
+        if mode == "merge_on_read"
         else None
     )
-    # DV entries visible at PLAN time, by identity — any entry beyond
-    # these seen at commit time was committed concurrently
-    planned_dv = {(d["version"], tuple(d["files"])) for d in snap.dv}
-
-    def revalidate() -> None:
-        now = _replay(spark, path)
-        _check_writer_features(now.properties, path)
-        if extra_revalidate is not None:
-            extra_revalidate(now.properties)
-        if now.mor:
-            raise RuntimeError(
-                f"conflict: equality tombstones committed to {path} "
-                f"since the {action} was planned; run tx_apply_deletes "
-                "and re-run"
-            )
-        # A DV committed since planning whose targets intersect ours is
-        # a write-write conflict: both sides chose positions against the
-        # same pre-image rows (two UPDATEs double-append post-images; an
-        # UPDATE over a concurrent DELETE resurrects the deleted row as
-        # its post-image). Delta rejects this as a concurrent
-        # modification; so do we — the same planned-set rule
-        # _commit_rewrite applies to removes. Disjoint-target DVs
-        # commute (position marks on different files) and still land.
-        tgt = set(targets)
-        for d in now.dv:
-            if (d["version"], tuple(d["files"])) in planned_dv:
-                continue
-            clash = tgt.intersection(d["targets"])
-            if clash:
-                raise RuntimeError(
-                    f"conflict: a concurrent delete/update committed "
-                    f"deletion vectors against files this {action} also "
-                    f"targets: {sorted(clash)[:3]}... — re-plan the "
-                    f"{action} on the new snapshot"
-                )
-        gone = [f for f in targets if f not in now.eps]
-        if gone:
-            raise RuntimeError(
-                f"conflict: files targeted by this {action} were "
-                f"rewritten concurrently: {gone[:3]}... — re-run the "
-                f"{action} on the new snapshot"
-            )
-
-    def build(next_v: int) -> dict:
-        payload = {
-            "version": next_v,
-            "action": action,
-            "add": added or [],
-            "remove": [],
-            "txn": txn,
-            "dv": {"files": sidecars, "targets": targets},
-            "reader": 4,
-        }
-        if delta:
-            payload["properties"] = delta
-        if stats:
-            payload["stats"] = stats
-        if blooms:
-            payload["blooms"] = blooms
-        if cdf_files is not None:
-            payload["cdf"] = {"files": cdf_files, "key": None}
-        if rt_counts is not None:
-            payload["row_bases"] = _fresh_row_bases(next_v, rt_counts)
-        return payload
-
-    return _commit_with_retries(
-        spark, path, fs, build, txn, max_retries,
-        revalidate=revalidate, checked_at=snap.version,
+    hit_files = sorted(
+        r[0] for r in matched.select("_file").distinct().collect()
     )
-
-
-def _dv_empty_delete(
-    spark, path: str, snap: "_Snapshot", txn: str | None, cdf: bool,
-    action: str = "delete",
-) -> int:
-    """Nothing matched: commit an empty delete/update so the txn id is
-    still recorded for idempotence and change feeds checkpoint past a
-    no-op (same contract as tx_delete's no-touch path). Commits
-    directly — NOT via ``_commit_rewrite`` — because an empty commit
-    adds and removes nothing, so the rewrite conflict checks (notably
-    the planned-DV/tombstone set rule, which refuses while delete
-    debt is live) do not apply to it: a no-match delete on a table
-    carrying DVs must be a clean no-op, not a conflict."""
-    fs = hadoop_fs(spark, path)[0]
-
-    def build(next_v: int) -> dict:
-        payload = {
-            "version": next_v,
-            "action": action,
-            "add": [],
-            "remove": [],
-            "txn": txn,
-        }
-        if cdf:
-            payload["cdf"] = {"files": [], "key": None}
-        return payload
-
-    return _commit_with_retries(spark, path, fs, build, txn, 20)
+    if not hit_files:
+        return _commit_dml(spark, path, snap, txn, action, cdf)
+    if mode == "merge_on_read":
+        added = (
+            []
+            if updated is None
+            else _stage_and_place(
+                _to_physical(updated, snap.schema), path, snap.partition_by
+            )
+        )
+        return _commit_dml(
+            spark, path, snap, txn, action, cdf, added=added,
+            dv={"files": sidecars, "targets": hit_files},
+            pre=pre, post=updated,
+        )
+    old = _read_table_files(spark, path, hit_files, snap)
+    if cdf:
+        old = old.localCheckpoint(eager=False)
+    hit = F.coalesce(cond, F.lit(False))
+    if assign is None:
+        kept = old.filter(~hit)
+    else:
+        kept = old.select(
+            *[
+                F.when(hit, F.expr(assign[c]).cast(types[c]))
+                .otherwise(F.col(c))
+                .alias(c)
+                if c in assign
+                else F.col(c)
+                for c in data_cols
+            ]
+        )
+    added = _stage_and_place(
+        _to_physical(kept, snap.schema), path, snap.partition_by
+    )
+    gone = old.filter(cond)
+    return _commit_dml(
+        spark, path, snap, txn, action, cdf, added=added, removed=hit_files,
+        pre=gone, post=None if assign is None else assigned(gone),
+    )
 
 
 def tx_delete_where(
@@ -6259,122 +6337,7 @@ def tx_delete_where(
     ``cdf.enabled`` property, true when unset). For deletion vectors
     this costs one extra scan of the targeted files, bounded by the
     delete itself."""
-    from pyspark.sql import functions as F
-
-    if mode not in ("copy_on_write", "merge_on_read"):
-        raise ValueError(
-            f"mode must be copy_on_write|merge_on_read, got {mode!r}"
-        )
-    snap = _replay(spark, path)
-    _check_writer_features(snap.properties, path)
-    if txn is not None and (prior := snap.txns.get(txn)) is not None:
-        return prior
-    if snap.mor:
-        raise ValueError(
-            f"tx_delete_where on {path} with live equality tombstones "
-            f"(versions {[t['version'] for t in snap.mor]}); run "
-            "tx_apply_deletes first"
-        )
-    if mode == "copy_on_write" and snap.dv:
-        raise ValueError(
-            f"tx_delete_where(mode='copy_on_write') on {path} with "
-            f"live deletion vectors (versions "
-            f"{[d['version'] for d in snap.dv]}); run tx_apply_deletes "
-            "first"
-        )
-    if cdf is None:
-        cdf = _cdf_props_default(snap.properties)
-    files = sorted(snap.eps)
-    if prune is not None:
-        conjuncts = [prune] if isinstance(prune, tuple) else list(prune)
-        pm = _phys_map(snap.schema) if snap.schema else {}
-        pr = [(pm.get(c, c), lo, hi) for c, lo, hi in conjuncts]
-        files = [
-            f for f in files if not _prunable(snap.stats.get(f) or {}, pr)
-        ]
-        if files and snap.blooms:
-            # equality prune conjuncts consult blooms, same as tx_read
-            eqs = [
-                (c, lo) for c, lo, hi in pr
-                if lo is not None and lo == hi
-            ]
-            if eqs:
-                files = _bloom_prune(spark, path, snap, files, eqs)
-    if not files:
-        return _dv_empty_delete(spark, path, snap, txn, cdf)
-    scan = _scan_files(spark, path, snap, files, with_pos=True)
-    if snap.dv:
-        # don't re-mark already-deleted positions (idempotent stacking)
-        live_pos = spark.read.parquet(
-            *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
-        )
-        scan = scan.join(
-            F.broadcast(live_pos), ["_file", "_pos"], "left_anti"
-        )
-    cond = F.expr(condition)
-    matched = scan.filter(cond)  # IS TRUE: NULLs survive
-    if mode == "merge_on_read":
-        # round 16 (guide §1.2): one evaluation of the matched set
-        # serves the DV stage, the target list and the CDF delete
-        # frame (the frame previously re-scanned the target files and
-        # semi-joined the sidecar read-back; the predicate is
-        # deterministic over this snapshot, the assumption the old
-        # independent evaluations already made)
-        matched = matched.localCheckpoint(eager=False)
-        sidecars = _stage_dv(matched.select("_file", "_pos"), path)
-        targets = sorted(
-            r[0]
-            for r in matched.select("_file").distinct().collect()
-        )
-        if not targets:
-            return _dv_empty_delete(spark, path, snap, txn, cdf)
-        cdf_files = None
-        if cdf:
-            deleted = (
-                matched.drop("_file", "_pos")
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            cdf_files = _stage_cdf(_to_physical(deleted, snap.schema), path)
-        return _commit_dv(
-            spark, path, snap, sidecars, targets, txn, cdf_files
-        )
-    touched = sorted(
-        r[0] for r in matched.select("_file").distinct().collect()
-    )
-    if not touched:
-        return _dv_empty_delete(spark, path, snap, txn, cdf)
-    old = _read_table_files(spark, path, touched, snap)
-    if cdf:
-        # round 16: survivor rewrite + CDF delete frame share one
-        # materialization of the touched-file read
-        old = old.localCheckpoint(eager=False)
-    survivors = old.filter(~F.coalesce(cond, F.lit(False)))
-    extra = None
-    if cdf:
-        deleted_rows = old.filter(cond).withColumn(
-            "_change_type", F.lit("delete")
-        )
-        extra = {
-            "cdf": {
-                "files": _stage_cdf(
-                    _to_physical(deleted_rows, snap.schema), path
-                ),
-                "key": None,
-            }
-        }
-        delta = _writer_feature_delta(snap.properties, {"cdf"})
-        if delta:
-            extra["properties"] = delta
-    added = _stage_and_place(
-        _to_physical(survivors, snap.schema), path, snap.partition_by
-    )
-    return _commit_rewrite(
-        spark, path, added, touched, snap.version, txn, "delete",
-        stats=_rewrite_stats(spark, path, touched, added, None, snap),
-        blooms=_rewrite_blooms(spark, path, touched, added, snap),
-        extra=extra,
-        planned_rt=_row_tracking_on(snap.properties),
-    )
+    return _dml(spark, path, condition, None, mode, txn, cdf, prune)
 
 
 def tx_delete_positions(
@@ -6418,23 +6381,24 @@ def tx_delete_positions(
         r[0] for r in placed.select("_file").distinct().collect()
     )
     if not targets:
-        return _dv_empty_delete(spark, path, snap, txn, cdf)
+        return _commit_dml(spark, path, snap, txn, "delete", cdf)
     missing = [f for f in targets if f not in snap.eps]
     if missing:
         raise ValueError(
             f"positions reference files not live at {path}: "
             f"{missing[:3]}... (stale scan? vacuumed snapshot?)"
         )
-    cdf_files = None
+    deleted = None
     if cdf:
         deleted = (
             _scan_files(spark, path, snap, targets, with_pos=True)
             .join(F.broadcast(placed), ["_file", "_pos"], "semi")
             .drop("_file", "_pos")
-            .withColumn("_change_type", F.lit("delete"))
         )
-        cdf_files = _stage_cdf(_to_physical(deleted, snap.schema), path)
-    return _commit_dv(spark, path, snap, sidecars, targets, txn, cdf_files)
+    return _commit_dml(
+        spark, path, snap, txn, "delete", cdf,
+        dv={"files": sidecars, "targets": targets}, pre=deleted,
+    )
 
 
 def tx_dedup_rows(
@@ -6538,186 +6502,7 @@ def tx_update(
     touched file is and aborts loudly. ``cdf`` records
     ``update_preimage``/``update_postimage`` rows (the merge-CDF
     contract), default per the table's ``cdf.enabled`` property."""
-    from pyspark.sql import functions as F
-
-    if mode not in ("copy_on_write", "merge_on_read"):
-        raise ValueError(
-            f"mode must be copy_on_write|merge_on_read, got {mode!r}"
-        )
-    if not set:
-        raise ValueError("tx_update needs at least one SET assignment")
-    snap = _replay(spark, path)
-    _check_writer_features(snap.properties, path)
-    if txn is not None and (prior := snap.txns.get(txn)) is not None:
-        return prior
-    if snap.mor:
-        raise ValueError(
-            f"tx_update on {path} with live equality tombstones "
-            f"(versions {[t['version'] for t in snap.mor]}); run "
-            "tx_apply_deletes first"
-        )
-    if mode == "copy_on_write" and snap.dv:
-        raise ValueError(
-            f"tx_update(mode='copy_on_write') on {path} with live "
-            f"deletion vectors (versions "
-            f"{[d['version'] for d in snap.dv]}); run tx_apply_deletes "
-            "first"
-        )
-    if cdf is None:
-        cdf = _cdf_props_default(snap.properties)
-    files = sorted(snap.eps)
-    if prune is not None:
-        conjuncts = [prune] if isinstance(prune, tuple) else list(prune)
-        pm = _phys_map(snap.schema) if snap.schema else {}
-        pr = [(pm.get(c, c), lo, hi) for c, lo, hi in conjuncts]
-        files = [
-            f for f in files if not _prunable(snap.stats.get(f) or {}, pr)
-        ]
-        if files and snap.blooms:
-            eqs = [
-                (c, lo) for c, lo, hi in pr
-                if lo is not None and lo == hi
-            ]
-            if eqs:
-                files = _bloom_prune(spark, path, snap, files, eqs)
-    if not files:
-        return _dv_empty_delete(spark, path, snap, txn, cdf, "update")
-    scan = _scan_files(spark, path, snap, files, with_pos=True)
-    if snap.dv:
-        live_pos = spark.read.parquet(
-            *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
-        )
-        scan = scan.join(
-            F.broadcast(live_pos), ["_file", "_pos"], "left_anti"
-        )
-    data_cols = [c for c in scan.columns if c not in ("_file", "_pos")]
-    bad = [c for c in set if c not in data_cols]
-    if bad:
-        raise ValueError(
-            f"tx_update SET columns {bad} not in the table "
-            f"(has {data_cols})"
-        )
-    cond = F.expr(condition)
-    matched = scan.filter(cond)
-
-    def _assign(df):
-        return df.select(
-            *[
-                F.expr(set[c]).alias(c) if c in set else F.col(c)
-                for c in data_cols
-            ]
-        )
-
-    before_types = dict(scan.select(*data_cols).dtypes)
-    updated = _assign(matched.drop("_file", "_pos"))
-    retyped = {
-        c: (before_types[c], t)
-        for c, t in updated.dtypes
-        if t != before_types[c]
-    }
-    if retyped:
-        raise ValueError(
-            f"tx_update assignments change column types {retyped}; "
-            "cast the expression back to the column's type"
-        )
-    if mode == "merge_on_read":
-        # round 16 (guide §1.2): the matched-row set fed FOUR separate
-        # evaluations of the pruned-file scan — the DV position stage,
-        # the post-image data write, the CDF pre-image (via a sidecar
-        # read-back + semi-join re-scan) and the CDF post-image.
-        # Checkpoint it once (per-run intermediate; the predicate is
-        # deterministic over this snapshot, the same assumption the
-        # old independent re-evaluations already made) and derive all
-        # four from the materialized rows.
-        matched = matched.localCheckpoint(eager=False)
-        updated = _assign(matched.drop("_file", "_pos"))
-        _check_constraints(updated, snap.properties, path, "tx_update")
-        sidecars = _stage_dv(matched.select("_file", "_pos"), path)
-        targets = sorted(
-            r[0]
-            for r in matched.select("_file").distinct().collect()
-        )
-        if not targets:
-            return _dv_empty_delete(spark, path, snap, txn, cdf, "update")
-        added = _stage_and_place(
-            _to_physical(updated, snap.schema), path, snap.partition_by
-        )
-        cdf_files = None
-        if cdf:
-            pre = (
-                matched.drop("_file", "_pos")
-                .withColumn("_change_type", F.lit("update_preimage"))
-            )
-            post = updated.withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
-            cdf_files = _stage_cdf(
-                _to_physical(pre.unionByName(post), snap.schema), path
-            )
-        return _commit_dv(
-            spark, path, snap, sidecars, targets, txn, cdf_files,
-            action="update", added=added,
-            stats=_rewrite_stats(spark, path, targets, added, None, snap),
-            blooms=_rewrite_blooms(spark, path, targets, added, snap),
-            extra_revalidate=lambda props: _check_constraints(
-                updated, props, path, "tx_update"
-            ),
-        )
-    _check_constraints(updated, snap.properties, path, "tx_update")
-    touched = sorted(
-        r[0] for r in matched.select("_file").distinct().collect()
-    )
-    if not touched:
-        return _dv_empty_delete(spark, path, snap, txn, cdf, "update")
-    old = _read_table_files(spark, path, touched, snap)
-    if cdf:
-        # round 16: with CDF on, the touched-file read fed THREE
-        # evaluations (full rewrite, pre-image, post-image) — one
-        # materialization serves all three (per-run intermediate)
-        old = old.localCheckpoint(eager=False)
-    hit = F.coalesce(cond, F.lit(False))
-    rewritten = old.select(
-        *[
-            F.when(hit, F.expr(set[c]).cast(before_types[c]))
-            .otherwise(F.col(c))
-            .alias(c)
-            if c in set
-            else F.col(c)
-            for c in data_cols
-        ]
-    )
-    extra = None
-    if cdf:
-        pre = old.filter(cond).withColumn(
-            "_change_type", F.lit("update_preimage")
-        )
-        post = _assign(old.filter(cond)).withColumn(
-            "_change_type", F.lit("update_postimage")
-        )
-        extra = {
-            "cdf": {
-                "files": _stage_cdf(
-                    _to_physical(pre.unionByName(post), snap.schema), path
-                ),
-                "key": None,
-            }
-        }
-        delta = _writer_feature_delta(snap.properties, {"cdf"})
-        if delta:
-            extra["properties"] = delta
-    added = _stage_and_place(
-        _to_physical(rewritten, snap.schema), path, snap.partition_by
-    )
-    return _commit_rewrite(
-        spark, path, added, touched, snap.version, txn, "update",
-        stats=_rewrite_stats(spark, path, touched, added, None, snap),
-        blooms=_rewrite_blooms(spark, path, touched, added, snap),
-        extra=extra,
-        revalidate=lambda props: _check_constraints(
-            updated, props, path, "tx_update"
-        ),
-        planned_rt=_row_tracking_on(snap.properties),
-    )
+    return _dml(spark, path, condition, set, mode, txn, cdf, prune)
 
 
 def tx_optimize_zorder(

@@ -88,6 +88,33 @@ def test_self_join_and_special_chars(spark):
     assert got == want
 
 
+def test_affix_trim_ignores_session_collation(spark):
+    """The affix trim takes min/max in binary order under any session
+    collation: case-insensitively the keys below share the prefix
+    'xA', which 'xab2' lacks, and trimming it would cut 'xab2' and
+    'xAb1' to cores one edit apart (their real distance is 2). The
+    pairs must equal a binary session's, and the brute force."""
+    keys = ["xAb1", "xab2", "xAc3", "xAbc1"]
+
+    def pairs(collation):
+        df = spark.createDataFrame([(k,) for k in keys], "k string").select(
+            F.collate("k", collation).alias("k")
+        )
+        return {
+            (r.k_l, r.k_r, r.distance)
+            for r in fuzzy_key_join(df, df, "k", "k", 1).collect()
+        }
+
+    binary = pairs("UTF8_BINARY")
+    conf = "spark.sql.session.collation.default"
+    spark.conf.set(conf, "UTF8_LCASE")
+    try:
+        lcase = pairs("UTF8_LCASE")
+    finally:
+        spark.conf.unset(conf)
+    assert lcase == binary == _brute_force(keys, keys, 1)
+
+
 def test_no_cartesian_plan(spark, name_tables):
     left, right, _, _ = name_tables
     plan = (

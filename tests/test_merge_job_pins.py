@@ -1,13 +1,18 @@
-"""Spark job-count pins, one per MERGE flavor. Every flavor runs through
-the one MERGE prepare (``_prepare_merge_into``); each pin counts the
-jobs one ``tx_merge`` call starts on a small fixed table and asserts
-the count is no higher than its ceiling.
+"""Spark job-count pins for the row-level mutations: one per MERGE
+flavor and one per UPDATE / DELETE WHERE / positional-delete flavor.
+Each pin counts the jobs one call starts on the same small fixed table
+and asserts the count is no higher than its ceiling.
 
-The ceilings are the counts of the one prepare. The comment after each
-gives the count measured before it, with the keyed upsert on its own
+Every MERGE flavor runs through the one MERGE prepare
+(``_prepare_merge_into``); UPDATE and DELETE WHERE run through one DML
+body and every data commit through ``_commit_rewrite``. The ceilings
+are the counts of those paths. The comment after each gives the count
+measured before them: for MERGE with the keyed upsert on its own
 prepare and the clause engine profiling the source and evaluating its
-join more than once (same fixture, default session config). A change
-that adds a job to any flavor fails here and must say why."""
+join more than once; for the DML flavors with their own bodies and a
+separate deletion-vector commit (same fixture, default session
+config). A change that adds a job to any flavor fails here and must
+say why."""
 
 from __future__ import annotations
 
@@ -15,8 +20,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from distributed_mapreduce__spark.sources.txlog import (
+    tx_delete_positions,
+    tx_delete_where,
     tx_merge,
     tx_read,
+    tx_scan_with_pos,
+    tx_update,
     tx_write,
 )
 
@@ -92,6 +101,76 @@ def test_merge_job_count_pinned(spark, tmp_path, flavor):
     _table(spark, t)
     src = _source(spark)
     jobs = _jobs_during(spark, lambda: tx_merge(src, t, "id", **kwargs))
+    assert tx_read(spark, t).count() == rows_after
+    assert jobs <= ceiling, (
+        f"{flavor} ran {jobs} Spark jobs, above its ceiling {ceiling}"
+    )
+
+
+#: the DML matched set: rows 40..59, two of the four files after
+#: stats pruning
+_COND, _PRUNE = "id BETWEEN 40 AND 59", ("id", 40, 59)
+
+# flavor -> (call on the table path, rows after, job ceiling). The
+# comment after each ceiling is the count before the one DML body.
+DML_FLAVORS = {
+    "update_dv": (
+        lambda spark, t: tx_update(
+            spark, t, _COND, {"tag": "'upd'"}, prune=_PRUNE
+        ),
+        200,
+        10,  # 10
+    ),
+    "update_dv_nocdf": (
+        lambda spark, t: tx_update(
+            spark, t, _COND, {"tag": "'upd'"}, prune=_PRUNE, cdf=False
+        ),
+        200,
+        9,  # 9
+    ),
+    "update_cow": (
+        lambda spark, t: tx_update(
+            spark, t, _COND, {"tag": "'upd'"}, prune=_PRUNE,
+            mode="copy_on_write",
+        ),
+        200,
+        10,  # 10
+    ),
+    "delete_where_dv": (
+        lambda spark, t: tx_delete_where(spark, t, _COND, prune=_PRUNE),
+        180,
+        6,  # 6
+    ),
+    "delete_where_dv_nocdf": (
+        lambda spark, t: tx_delete_where(
+            spark, t, _COND, prune=_PRUNE, cdf=False
+        ),
+        180,
+        5,  # 5
+    ),
+    "delete_where_cow": (
+        lambda spark, t: tx_delete_where(
+            spark, t, _COND, prune=_PRUNE, mode="copy_on_write"
+        ),
+        180,
+        10,  # 10
+    ),
+    "delete_positions": (
+        lambda spark, t: tx_delete_positions(
+            tx_scan_with_pos(spark, t).filter("id % 10 = 0"), t
+        ),
+        180,
+        11,  # 11
+    ),
+}
+
+
+@pytest.mark.parametrize("flavor", sorted(DML_FLAVORS))
+def test_dml_job_count_pinned(spark, tmp_path, flavor):
+    call, rows_after, ceiling = DML_FLAVORS[flavor]
+    t = str(tmp_path / "t")
+    _table(spark, t)
+    jobs = _jobs_during(spark, lambda: call(spark, t))
     assert tx_read(spark, t).count() == rows_after
     assert jobs <= ceiling, (
         f"{flavor} ran {jobs} Spark jobs, above its ceiling {ceiling}"

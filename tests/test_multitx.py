@@ -416,6 +416,66 @@ def test_multi_merge_atomic_and_conflict_guards(spark, tmp_path, monkeypatch):
     assert tags(a)[0] == "steal"
 
 
+@pytest.mark.parametrize("op", ["delete_where", "update"])
+def test_dv_dml_refuses_file_a_pending_multi_merge_rewrote(
+    spark, tmp_path, monkeypatch, op
+):
+    """A deletion-vector DELETE WHERE / UPDATE that marks rows in a file
+    a PENDING multi-table merge rewrote is the same conflict as a
+    rewrite of that file: the pending commit sits at the planning
+    version itself, and once it resolves its outputs would bring the
+    deleted row back (or keep a second, un-updated copy of it). After
+    the transaction resolves, re-running the statement gives the
+    serial result."""
+    from distributed_mapreduce__spark.sources.txlog import (
+        tx_delete_where,
+        tx_update,
+    )
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    coord = str(tmp_path / "catalog")
+    # one file per table, so the merge and the statement share it
+    tx_write(_df(spark, 0, 5, "seed").coalesce(1), a, stats_cols=["id"])
+    tx_write(_df(spark, 0, 5, "seed").coalesce(1), b, stats_cols=["id"])
+    txlog.tx_set_properties(spark, a, {"cdf.enabled": False})
+    txlog.tx_set_properties(spark, b, {"cdf.enabled": False})
+    merge = dict(
+        coordinator=coord,
+        txn="dv-mm",
+        modes={a: "merge", b: "merge"},
+        merge_keys={a: "id", b: "id"},
+    )
+    real = multitx._write_atomic
+
+    def dying_publish(spark_, fs, path, payload):
+        if "_multitx/" in path:
+            raise RuntimeError("simulated crash before coordinator publish")
+        return real(spark_, fs, path, payload)
+
+    monkeypatch.setattr(multitx, "_write_atomic", dying_publish)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        tx_multi({a: _df(spark, 3, 5, "m"), b: _df(spark, 3, 5, "m")}, **merge)
+    monkeypatch.setattr(multitx, "_write_atomic", real)
+    assert len(tx_multi_pending(spark, a)) == 1
+
+    def statement():
+        if op == "delete_where":
+            return tx_delete_where(spark, a, "id = 4")
+        return tx_update(spark, a, "id = 4", {"tag": "'upd'"})
+
+    with pytest.raises(RuntimeError, match="pending multi-table"):
+        statement()
+    # resolve: the same-txn retry publishes the coordinator record
+    tx_multi({a: _df(spark, 3, 5, "m"), b: _df(spark, 3, 5, "m")}, **merge)
+    assert tx_multi_pending(spark, a) == []
+    statement()
+    rows = sorted((r.id, r.tag) for r in tx_read(spark, a).collect())
+    want = [(0, "seed"), (1, "seed"), (2, "seed"), (3, "m")]
+    if op == "update":
+        want.append((4, "upd"))
+    assert rows == want
+
+
 def test_multi_merge_abort_unblocks_and_feeds_cdf(
     spark, tmp_path, monkeypatch
 ):

@@ -7,7 +7,8 @@
   (base -1 + reader 5) instead of minting a dead fresh base;
 - _commit_rewrite raises a conflict when row tracking is toggled
   between the planning snapshot and commit time (instead of silently
-  re-identifying rows the enable commit just backfilled);
+  re-identifying rows the enable commit just backfilled), for a
+  deletion-vector UPDATE's post-images as for a rewrite;
 - the txtable BATCH read honors option("withRowIds") — the schema it
   declares is the schema its arrow batches produce, DV drops applied
   after id assignment — and refuses on untracked tables;
@@ -38,6 +39,7 @@ from distributed_mapreduce__spark.sources.txlog import (
     tx_rename_column,
     tx_restore,
     tx_scan_with_row_ids,
+    tx_update,
     tx_write,
 )
 
@@ -129,6 +131,34 @@ def test_rewrite_conflicts_when_tracking_flips_mid_flight(spark, tmp_path):
             stats=prep["stats"], blooms=prep["blooms"],
             conflict_keys=prep["conflict_keys"], extra=prep["extra"],
         )
+
+
+def test_dv_update_conflicts_when_tracking_flips_mid_flight(
+    spark, tmp_path, monkeypatch
+):
+    """The same rule for a deletion-vector UPDATE: its post-images are
+    new row versions planned without row ids, so tracking enabled
+    between planning and commit must abort the commit instead of
+    landing rows that read a NULL ``_row_id`` on a tracked table."""
+    t = str(tmp_path / "t")
+    tx_write(_df(spark, 0, 50).repartition(2), t, stats_cols=["id"])
+    real_stage = txlog._stage_dv
+    fired = {}
+
+    def stage_then_enable(pos, path):
+        if "done" not in fired:
+            fired["done"] = True
+            tx_enable_row_tracking(spark, path)
+        return real_stage(pos, path)
+
+    monkeypatch.setattr(txlog, "_stage_dv", stage_then_enable)
+    with pytest.raises(RuntimeError, match="row tracking.*toggled"):
+        tx_update(spark, t, "id < 5", {"tag": "'u'"})
+    # re-run on the tracked snapshot: every row carries an id
+    tx_update(spark, t, "id < 5", {"tag": "'u'"})
+    ids = _id_map(spark, t)
+    assert len(ids) == 50 and None not in ids
+    assert sorted(i for i, tag in ids.values() if tag == "u") == [0, 1, 2, 3, 4]
 
 
 def test_batch_read_with_row_ids_matches_scan(spark, tmp_path):

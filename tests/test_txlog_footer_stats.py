@@ -174,3 +174,29 @@ def test_happy_path_append_runs_no_post_write_jobs(spark, tmp_path):
     assert stats and min(e["i"][0] for e in stats.values()) == -3
     assert max(e["i"][1] for e in stats.values()) == 11
     assert _commit_bases(t, 2)
+
+
+def test_collect_stats_job_keys_by_commit_name(spark, tmp_path):
+    """The Spark-job fallback of ``_collect_stats`` (taken here because
+    a snapshot is passed) keys its rows by the caller's names too: an
+    absolute source ref, as a shallow clone stores it, and a relative
+    name under a partition directory whose value the scanned URI
+    escapes."""
+    src, t, p = (str(tmp_path / n) for n in ("src", "t", "p"))
+    txlog.tx_write(spark.range(10, 20).coalesce(1), src)
+    txlog.tx_write(spark.range(0, 1).coalesce(1), t)
+    ref = f"{src}/{sorted(txlog._replay(spark, src).eps)[0]}"
+    got = txlog._collect_stats(
+        spark, t, [ref], ["id"], txlog._replay(spark, t)
+    )
+    assert got == {ref: {"id": [10, 19]}}
+
+    txlog.tx_write(
+        spark.range(0, 4).select("id", F.lit("a b").alias("k")).coalesce(1),
+        p,
+        partition_by=["k"],
+    )
+    snap = txlog._replay(spark, p)
+    (name,) = sorted(snap.eps)
+    got = txlog._collect_stats(spark, p, [name], ["id"], snap)
+    assert list(got) == [name] and got[name]["id"] == [0, 3]

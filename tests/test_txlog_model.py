@@ -1,9 +1,11 @@
 """Model-based randomized-operations test for the transactional table
 (sources/txlog.py): a seeded random sequence of append / overwrite /
-merge / delete / compact / vacuum runs against both the real table and
-a trivial in-memory reference model; after EVERY operation the
-snapshot read must equal the model, and a remembered historical
-version must keep replaying exactly until a vacuum retires it.
+merge / delete / compact / vacuum / UPDATE / DELETE WHERE (each as a
+deletion vector or a copy-on-write rewrite) / settle runs against both
+the real table and a trivial in-memory reference model; after EVERY
+operation the snapshot read must equal the model, and a remembered
+historical version must keep replaying exactly until a vacuum retires
+it. Ops that refuse live deletion vectors settle them first.
 
 This is the cheap half of Jepsen-style checking: single-writer
 linear histories, exhaustively compared — the concurrency windows are
@@ -16,10 +18,13 @@ import random
 from pyspark.sql import functions as F
 
 from distributed_mapreduce__spark.sources.txlog import (
+    tx_apply_deletes,
     tx_compact,
     tx_delete,
+    tx_delete_where,
     tx_merge,
     tx_read,
+    tx_update,
     tx_vacuum,
     tx_write,
 )
@@ -63,11 +68,30 @@ def test_random_op_sequence_matches_model(spark, tmp_path):
     history: list[tuple[int, list]] = []  # (version, expected rows)
 
     version = 0
+
+    def settle():
+        nonlocal version
+        got = tx_apply_deletes(spark, t)
+        if got is not None:
+            version = got
+
+    def key_window():
+        lo = rng.randrange(KEYSPACE)
+        hi = lo + rng.randint(0, 12)
+        prune = ("id", lo, hi) if rng.random() < 0.5 else None
+        return lo, hi, f"id BETWEEN {lo} AND {hi}", prune
+
     for step in range(N_OPS):
         op = rng.choice(
             ["append", "append", "merge", "merge", "delete",
-             "overwrite", "compact", "vacuum"]
+             "overwrite", "compact", "vacuum", "update", "update",
+             "delete_where", "delete_where", "settle"]
         )
+        mode = rng.choice(["merge_on_read", "copy_on_write"])
+        if op in ("merge", "delete", "compact") or (
+            op in ("update", "delete_where") and mode == "copy_on_write"
+        ):
+            settle()  # these refuse live deletion vectors
         if op == "append":
             rows = fresh_rows(rng.randint(1, 8))
             version = tx_write(
@@ -98,6 +122,20 @@ def test_random_op_sequence_matches_model(spark, tmp_path):
         elif op == "vacuum":
             tx_vacuum(spark, t)
             history.clear()  # time travel legitimately dies here
+        elif op == "update":
+            lo, hi, cond, prune = key_window()
+            tag_seq += 1
+            tag = f"u{tag_seq}"
+            version = tx_update(
+                spark, t, cond, {"tag": f"'{tag}'"}, mode=mode, prune=prune
+            )
+            model = [(k, tag if lo <= k <= hi else g) for k, g in model]
+        elif op == "delete_where":
+            lo, hi, cond, prune = key_window()
+            version = tx_delete_where(spark, t, cond, mode=mode, prune=prune)
+            model = [r for r in model if not lo <= r[0] <= hi]
+        elif op == "settle":
+            settle()
         assert _snapshot(spark, t) == sorted(model), f"step {step} op {op}"
         if rng.random() < 0.25:
             history.append((version, sorted(model)))
